@@ -1,9 +1,17 @@
 """Tick-pipeline column expressions (reference parity, P1-P4 + S3-S5).
 
-Everything here is a pure Column expression over built-in functions, so the
-whole parse→route→derive chain stays inside whole-stage codegen — the Spark
-analog of the reference's hand-fused event loop (main.rs:65-135), but
-vectorized and distributed.
+Everything here is a pure Column expression over built-in functions — the
+Spark analog of the reference's hand-fused event loop (main.rs:65-135),
+but distributed.  ``from_json`` and ``get_json_object`` do not run in
+whole-stage codegen (they fall back to interpreted evaluation), so the
+parse is the chain's dominant per-row cost and the rule is ONE parse per
+line: ``route`` parses into a single envelope struct and derives
+``message_type``, ``price_tick`` and ``heartbeat`` from it, and
+``get_json_object(v, "$")`` survives only as the exact "is JSON" test.
+The envelope's ``from_json`` carries an explicit (default) option because
+Catalyst's OptimizeCsvJsonExprs rewrites an option-less ``from_json``
+into one single-field parse per extracted field — and a filter pushed
+below route's projection (``publishable``) copies every one of them.
 
 Semantic invariants reproduced (SURVEY.md §2.1):
   * blank lines skipped            (oanda_client.rs:51-53)
@@ -19,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..schemas import HEARTBEAT, PRICE_TICK
+from ..schemas import HEARTBEAT, PRICE_TICK, TICK_ENVELOPE
 
 
 def nonblank_lines(df: DataFrame, col: str = "value") -> DataFrame:
@@ -42,37 +50,40 @@ def route(df: DataFrame, col: str = "value") -> DataFrame:
     a bad array element's field where serde rejects the whole message).
     """
     v = F.col(col)
-    # get_json_object returns null for non-JSON input → used both for the
-    # malformed-line drop and for the discriminator.
+    # get_json_object returns null for non-JSON input: the exact
+    # malformed-line drop (from_json gives all-null fields both for a
+    # malformed line and for valid JSON such as {} or 123).
     is_json = F.get_json_object(v, "$").isNotNull()
-    pt = F.from_json(v, PRICE_TICK)
-    hb = F.from_json(v, HEARTBEAT)
+    # ONE parse per line into the envelope; every field below reads it.
+    # The explicit (default) mode matters: OptimizeCsvJsonExprs splits a
+    # from_json whose options map is empty into one single-field parse
+    # per extracted field, and it leaves a non-empty map alone.
+    parsed = F.from_json(v, TICK_ENVELOPE, {"mode": "PERMISSIVE"})
+    env = F.col("env")
     # from_json yields null for a missing or type-mismatched field — the
     # closest Spark analog of a serde deserialization failure.
-    pt_valid = (pt["asks"].isNotNull() & pt["bids"].isNotNull()
-                & pt["closeoutAsk"].isNotNull() & pt["closeoutBid"].isNotNull()
-                & pt["instrument"].isNotNull() & pt["status"].isNotNull()
-                & pt["time"].isNotNull())
-    hb_valid = hb["time"].isNotNull()
-    is_hb = F.get_json_object(v, "$.type") == "HEARTBEAT"
-    has_instrument = F.get_json_object(v, "$.instrument").isNotNull()
+    pt_valid = (env["asks"].isNotNull() & env["bids"].isNotNull()
+                & env["closeoutAsk"].isNotNull() & env["closeoutBid"].isNotNull()
+                & env["instrument"].isNotNull() & env["status"].isNotNull()
+                & env["time"].isNotNull())
+    is_hb = env["type"] == "HEARTBEAT"
     msg_type = (
-        F.when(is_hb & hb_valid, F.lit("heartbeat"))
-         .when(~is_hb & has_instrument & pt_valid, F.lit("price_tick"))
+        F.when(is_hb & env["time"].isNotNull(), F.lit("heartbeat"))
+         .when(~is_hb & pt_valid, F.lit("price_tick"))
          .otherwise(F.lit("unknown"))
     )
-    out = (
+    routed = (
         df.where(is_json)  # S3: malformed JSON dropped (logged upstream)
-          .withColumn("message_type", msg_type)
-          .withColumn(
-              "price_tick",
-              F.when(F.col("message_type") == "price_tick", pt))
-          .withColumn(
-              "heartbeat",
-              F.when(F.col("message_type") == "heartbeat", hb))
-          .withColumnRenamed(col, "raw")
+          .select(parsed.alias("env"), v.alias("raw"))
+          .select(msg_type.alias("message_type"), "env", "raw")
     )
-    return out.select("message_type", "price_tick", "heartbeat", "raw")
+    tick = F.struct(*[env[f.name].alias(f.name) for f in PRICE_TICK])
+    beat = F.struct(*[env[f.name].alias(f.name) for f in HEARTBEAT])
+    return routed.select(
+        "message_type",
+        F.when(F.col("message_type") == "price_tick", tick).alias("price_tick"),
+        F.when(F.col("message_type") == "heartbeat", beat).alias("heartbeat"),
+        "raw")
 
 
 def price_as_double(c: Column) -> Column:

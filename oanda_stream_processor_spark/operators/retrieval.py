@@ -697,8 +697,11 @@ def _gate_sidecar_store(key, verdict) -> None:
     try:
         data = {}
         if os.path.isfile(path):
-            with open(path) as fh:
-                data = json.load(fh)
+            try:
+                with open(path) as fh:
+                    data = json.load(fh)
+            except ValueError:
+                data = {}   # corrupt sidecar: start over, replaced below
         if not isinstance(data, dict):
             data = {}
         data[key[0]] = {"fp": _gate_fingerprint(key),

@@ -399,6 +399,32 @@ def q125_word_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 BOILER_SH = 3              # shingle width (words)
 BOILER_DF_PCT = 1          # boilerplate if df >= this % of all docs
 
+
+def boiler_shingles_arrow(batches):
+    """q126 kernel over (doc_id, text) Arrow batches: each doc's distinct
+    BOILER_SH-word shingles in first-seen order; docs with fewer words
+    (null text included) are dropped."""
+    import pyarrow as pa
+    for batch in batches:
+        ids = batch.column(0)
+        texts = batch.column(1)
+        keep_ids, out = [], []
+        for i in range(len(ids)):
+            # a null text has no words, like an empty one (the
+            # oracle's STRING_SPLIT(NULL) fails LEN >= BOILER_SH too)
+            wsl = [x for x in (texts[i].as_py() or "").split(" ") if x]
+            if len(wsl) < BOILER_SH:
+                continue
+            keep_ids.append(ids[i].as_py())
+            out.append(list(dict.fromkeys(
+                " ".join(wsl[j:j + BOILER_SH])
+                for j in range(len(wsl) - (BOILER_SH - 1)))))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(keep_ids, type=pa.int64()),
+             pa.array(out, type=pa.list_(pa.string()))],
+            ["doc_id", "shs"])
+
+
 @query("q126_boilerplate_shingles", f"""
 WITH w AS (
   SELECT doc_id,
@@ -438,28 +464,8 @@ def q126_boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     under BOILER_SH words drop inside the task (mapInArrow may change
     cardinality), replacing the old HOF size-filter."""
     d = load_table(spark, sf_dir, "documents")
-
-    def sh_arrow(batches):
-        import pyarrow as pa
-        for batch in batches:
-            ids = batch.column(0)
-            texts = batch.column(1)
-            keep_ids, out = [], []
-            for i in range(len(ids)):
-                wsl = [x for x in texts[i].as_py().split(" ") if x]
-                if len(wsl) < BOILER_SH:
-                    continue
-                keep_ids.append(ids[i].as_py())
-                out.append(list(dict.fromkeys(
-                    " ".join(wsl[j:j + BOILER_SH])
-                    for j in range(len(wsl) - (BOILER_SH - 1)))))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(keep_ids, type=pa.int64()),
-                 pa.array(out, type=pa.list_(pa.string()))],
-                ["doc_id", "shs"])
-
     shs = (d.select("doc_id", "text")
-           .mapInArrow(sh_arrow, "doc_id long, shs array<string>"))
+           .mapInArrow(boiler_shingles_arrow, "doc_id long, shs array<string>"))
     n_docs = d.agg(F.count("*").alias("n_docs"))
     dfreq = (shs.select(F.explode("shs").alias("s"))
              .groupBy("s").agg(F.count("*").alias("dfc")))

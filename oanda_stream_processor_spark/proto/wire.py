@@ -30,7 +30,14 @@ _WT_VARINT = 0
 _WT_LEN = 2
 
 
+# one-byte varints: every value 0-127, which covers the tag byte of
+# every field number below 16 — most calls are served without a loop
+_SMALL = tuple(bytes((i,)) for i in range(128))
+
+
 def _varint(n: int) -> bytes:
+    if 0 <= n < 128:
+        return _SMALL[n]
     if n < 0:
         n &= (1 << 64) - 1  # two's-complement 64-bit, per spec
     out = bytearray()

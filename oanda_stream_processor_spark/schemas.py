@@ -44,6 +44,12 @@ HEARTBEAT = T.StructType([
     T.StructField("type", T.StringType()),
 ])
 
+# Parse envelope: the discriminator plus every PriceTick field, so one
+# from_json per line feeds routing, price_tick and heartbeat alike
+# (Heartbeat.time is PriceTick.time — same key, same string type).
+TICK_ENVELOPE = T.StructType(
+    [T.StructField("type", T.StringType())] + PRICE_TICK.fields)
+
 # Routed wide schema: one row per input line after parse+route (S3-S5).
 STREAM_MESSAGE = T.StructType([
     T.StructField("message_type", T.StringType()),   # price_tick|heartbeat|unknown

@@ -26,8 +26,14 @@ def configure_logging(level: int = logging.INFO) -> logging.Logger:
     return logger
 
 
+# the micro-batch phases of a trigger, in the order the loop runs them
+TRIGGER_PHASES = ("latestOffset", "getBatch", "queryPlanning", "addBatch",
+                  "walCommit")
+
+
 class PipelineListener(StreamingQueryListener):
-    """Counts lifecycle events and logs per-batch progress."""
+    """Counts lifecycle events and logs per-batch progress with the
+    trigger's duration breakdown (``durationMs`` per phase)."""
 
     def __init__(self):
         self.started = 0
@@ -44,8 +50,10 @@ class PipelineListener(StreamingQueryListener):
     def onQueryProgress(self, event):
         self.progressed += 1
         p = event.progress
-        self._log.info("progress %s: batch=%s rows=%s", p.name or p.id,
-                       p.batchId, p.numInputRows)
+        durations = p.durationMs or {}
+        self._log.info("progress %s: batch=%s rows=%s durationMs=%s",
+                       p.name or p.id, p.batchId, p.numInputRows,
+                       {k: durations[k] for k in TRIGGER_PHASES if k in durations})
 
     def onQueryIdle(self, event):
         pass

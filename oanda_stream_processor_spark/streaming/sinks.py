@@ -9,6 +9,9 @@
   stands in for tests so the foreachBatch plumbing is exercised either
   way. At cluster scale the idiomatic analog is the Kafka sink with
   binary `value` — same envelope bytes.
+* partitioned — one publisher per partition, opened, fed and closed
+  inside the same mapInPandas pass that encodes (one Python hop; only
+  per-partition counts return to the driver).
 """
 
 from __future__ import annotations
@@ -16,10 +19,11 @@ from __future__ import annotations
 import logging
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.ticks import publishable
-from .encode import encode_stream
+from .encode import encode_columns, encode_payloads, encode_stream
 
 log = logging.getLogger(__name__)
 
@@ -92,46 +96,51 @@ def publish_batch(batch_df: DataFrame, publisher) -> int:
 
     This is the single-socket reference-parity edge (one PUB socket,
     publisher.rs:10-25): payloads funnel through the driver, which caps
-    throughput at one socket's rate. For fan-out at scale use
-    publish_batch_partitioned below."""
+    throughput at one socket's rate, in arrival order (the batch is not
+    repartitioned).  Partition k+1 is computed while the driver
+    publishes partition k, so the driver holds at most two partitions.
+    For fan-out at scale use publish_batch_partitioned below."""
     encoded = encode_stream(publishable(batch_df))
     n = 0
-    for row in encoded.toLocalIterator():
+    for row in encoded.toLocalIterator(prefetchPartitions=True):
         publisher.publish(bytes(row.payload))
         n += 1
     return n
 
 
 def publish_batch_partitioned(batch_df: DataFrame, publisher_factory) -> int:
-    """Partition-parallel publish: every partition drains its encoded
+    """Partition-parallel publish: every partition encodes and drains its
     payloads through its OWN publisher (opened executor-side by
-    ``publisher_factory``), so nothing funnels through the driver and
-    throughput scales with partitions. Returns total messages published.
+    ``publisher_factory``) in one Python pass, so nothing funnels through
+    the driver and throughput scales with partitions. Returns total
+    messages published.
 
     This is the Kafka-shaped edge: with real brokers the factory opens a
     producer (or a ZMQ socket that *connects* to an XSUB/forwarder
-    device — many publishers, one fan-in) per partition. Only the tiny
-    per-partition counts come back to the driver."""
+    device — many publishers, one fan-in) per partition. Each partition
+    yields one count row; the driver collects and sums them, so the
+    publish stays one job with no extra shuffle."""
     # a single replay file arrives as one input partition; spread the
     # batch so the Python encode and the publish fan out across cores —
     # the row shuffle is cheap next to per-row encoding
     target = batch_df.sparkSession.sparkContext.defaultParallelism
-    encoded = encode_stream(publishable(batch_df).repartition(target))
+    columns = encode_columns(publishable(batch_df).repartition(target))
 
-    def _drain(rows) -> "list[int]":
+    def _publish(batches):
         pub = publisher_factory()
         n = 0
         try:
-            for row in rows:
-                pub.publish(bytes(row.payload))
-                n += 1
+            for pdf in batches:
+                for payload in encode_payloads(pdf):
+                    pub.publish(payload)
+                n += len(pdf)
         finally:
             close = getattr(pub, "close", None)
             if callable(close):
                 close()
-        return [n]
+        yield pd.DataFrame({"n": [n]})
 
-    return sum(encoded.rdd.mapPartitions(_drain).collect())
+    return sum(r.n for r in columns.mapInPandas(_publish, "n long").collect())
 
 
 def start_publish_stream_partitioned(stream_df: DataFrame, publisher_factory,

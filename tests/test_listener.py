@@ -1,12 +1,14 @@
 from __future__ import annotations
 
+import logging
 import uuid
 
 from oanda_stream_processor_spark.streaming.listener import PipelineListener
 from oanda_stream_processor_spark.streaming.pipeline import build_stream
 
 
-def test_listener_counts_lifecycle(spark, tick_capture):
+def test_listener_counts_lifecycle(spark, tick_capture, caplog):
+    caplog.set_level(logging.INFO, logger="oanda_stream_processor_spark")
     listener = PipelineListener()
     spark.streams.addListener(listener)
     try:
@@ -27,6 +29,11 @@ def test_listener_counts_lifecycle(spark, tick_capture):
     assert listener.started >= 1
     assert listener.progressed >= 1
     assert listener.errors == []
+    # progress lines carry the trigger's per-phase duration breakdown
+    progress = [r.getMessage() for r in caplog.records
+                if r.getMessage().startswith("progress ")]
+    assert progress and all("durationMs=" in m for m in progress)
+    assert any("'addBatch':" in m for m in progress)
 
 
 def test_streaming_observed_metrics(spark, tick_capture):

@@ -67,3 +67,21 @@ def test_generate_breaks_boundedness(spark):
                             F.row_number().over(W.orderBy("doc_id"))))
     flagged, ok = unbounded_global_windows(exploded)
     assert flagged and not ok
+
+
+def test_tick_chain_parses_each_line_once(spark, tick_capture):
+    """The executed tick plan holds ONE distinct from_json (the envelope)
+    and get_json_object only as the "is JSON" test on ``$``: without the
+    explicit from_json option Catalyst splits the parse per field, and
+    the pushed-down publishable() filter copies every split parse."""
+    import explain_audit as ea
+    from oanda_stream_processor_spark.functions.ticks import (
+        derive_tick_columns, nonblank_lines, publishable, route)
+    from oanda_stream_processor_spark.sources.ndjson import read_tick_lines
+    df = publishable(derive_tick_columns(route(nonblank_lines(
+        read_tick_lines(spark, tick_capture)))))
+    from_json, paths = ea.json_parse_calls(df)
+    assert len(from_json) == 1, from_json
+    assert paths == {"$"}
+    assert "(mode,PERMISSIVE)" in next(iter(from_json))
+    assert df.count() == 4

@@ -60,6 +60,18 @@ def test_price_tick_structure(asks, bids, ca, cb, instr, status, secs, nanos):
     '{"type":"HEARTBEAT","time":"2026-08-13T00:00:00Z"}',
     '{"type":"PRICE","time":"2026-08-13T00:00:01Z","instrument":"X_Y",'
     '"status":"t","closeoutBid":"1.0","closeoutAsk":"1.1","bids":[],"asks":[]}',
+    "{}",                                   # empty object -> unknown
+    '{"type":"HEARTBEAT","time":5}',        # non-string time reads as text
+    '{"type":"HEARTBEAT","time":{"a":1}}',
+    '{"type":"PRICE","time":"2026-08-13T00:00:02Z","instrument":"X_Y",'
+    '"status":"t","closeoutBid":1.0,"closeoutAsk":"1.1","bids":[],'
+    '"asks":[{"price":"1.1","liquidity":"many"}]}',  # numeric bid, bad liquidity
+    '{"type":"HEARTBEAT","time":"2026-08-13T00:00:03Z","instrument":"X_Y",'
+    '"status":"t","closeoutBid":"1.0","closeoutAsk":"1.1","bids":[],"asks":[]}',
+    '{"type":"PRICE","time":"2026-08-13T00:00:04Z","instrument":"X_Y",'
+    '"status":"t","closeoutBid":"1.0","closeoutAsk":"1.1","bids":[],"asks":[],'
+    '"type":"HEARTBEAT"}',                  # duplicate key: last wins
+    '{"type":"HEARTBEAT","time":"2026-08-13T00:00:05Z",}',  # trailing comma
 ]), min_size=1, max_size=12))
 def test_routing_partition_invariant(spark, tmp_path_factory, lines):
     """For ANY mix of line kinds: rows out == non-blank valid-JSON lines,

@@ -83,3 +83,27 @@ def test_unknown_rejected_at_encoder():
 def test_proto3_defaults_omitted():
     assert wire.encode_price_level("", 0) == b""
     assert wire.encode_heartbeat(None, None, "") == b""
+
+
+def _varint_loop(n: int) -> bytes:
+    """The plain LEB128 loop the table-served encoder must match."""
+    if n < 0:
+        n &= (1 << 64) - 1
+    out = bytearray()
+    while True:
+        b, n = n & 0x7F, n >> 7
+        if not n:
+            out.append(b)
+            return bytes(out)
+        out.append(b | 0x80)
+
+
+@pytest.mark.parametrize("n", [0, 1, 127, 128, 16383, 16384, 2**63, -1])
+def test_varint_matches_loop(n):
+    assert wire._varint(n) == _varint_loop(n)
+
+
+def test_tags_match_loop():
+    for field in range(1, 20):
+        for wt in (wire._WT_VARINT, wire._WT_LEN):
+            assert wire._tag(field, wt) == _varint_loop((field << 3) | wt)

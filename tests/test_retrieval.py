@@ -374,6 +374,26 @@ def test_gate_memo_persists_next_to_store(spark, tmp_path,
     assert not os.path.exists(os.path.join(sf, ".gate_memo.json"))
 
 
+def test_gate_sidecar_heals_a_corrupt_file(tmp_path):
+    """A corrupt .gate_memo.json is replaced by the next verdict's write
+    instead of disabling persistence for good."""
+    import json
+
+    batch = tmp_path / "store" / "batch_id=0"
+    batch.mkdir(parents=True)
+    files = tuple(f"file:{batch}/part-{i}.parquet" for i in range(2))
+    key = ("plan_store", (files,))
+    side = batch / R._GATE_SIDECAR
+    assert R._gate_sidecar_path(key) == str(side)
+    side.write_text("{not json")
+    assert R._gate_sidecar_load(key) is None
+
+    R._gate_memo_put(key, "blockmax")
+    R._GATE_MEMO.pop(key)               # a restarted process
+    assert R._gate_memo_get(key) == "blockmax"
+    assert json.loads(side.read_text())["plan_store"]["verdict"] == "blockmax"
+
+
 def test_maxscore_prunes_hard_on_zipfian_vocab(spark):
     """The fixtures' bounded ~100-word vocabulary makes every term
     common (df ~ N, idf ~ 0 for all), so q178's essential split keeps

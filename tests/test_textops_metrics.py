@@ -329,3 +329,22 @@ def test_numpy_hash_kernels_match_hof_on_adversarial_unicode(spark):
                  (_spark_shingle_hashes(d, with_pos=True).select("doc_id", "sh"),
                   _spark_shingle_hashes_hof(d))):
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_q126_kernel_treats_null_text_as_empty(spark):
+    """q126's shingle kernel on a derived documents frame: a null, an
+    empty and a whitespace-only text all have no words, so all three
+    drop like any doc under BOILER_SH words; real docs are unchanged."""
+    from oanda_stream_processor_spark.io import load_table
+    docs = (load_table(spark, SF, "documents")
+            .select("doc_id", "text").orderBy("doc_id").limit(20))
+    edge = spark.createDataFrame(
+        [(-1, None), (-2, ""), (-3, "   "), (-4, "one two three four")],
+        "doc_id long, text string")
+    out = {r.doc_id: r.shs for r in docs.unionByName(edge).mapInArrow(
+        textops.boiler_shingles_arrow, "doc_id long, shs array<string>").collect()}
+    assert -1 not in out and -2 not in out and -3 not in out
+    assert out[-4] == ["one two three", "two three four"]
+    for r in docs.collect():
+        words = [w for w in (r.text or "").split(" ") if w]
+        assert (r.doc_id in out) == (len(words) >= textops.BOILER_SH)

@@ -99,3 +99,92 @@ def test_nested_ladders_parsed(spark, tick_capture):
                    F.col("price_tick.bids")[0]["liquidity"].alias("liq"))
            .orderBy(F.desc("nb")).collect()[0])
     assert r.nb == 2 and r.liq == 1000000
+
+
+# --- routing golden table ----------------------------------------------------
+# (message_type, price_tick is null, heartbeat is null) per edge line, with
+# None for a dropped line.  Recorded from the per-field-parse route (one
+# from_json per schema plus get_json_object on $.type / $.instrument) and
+# pinned on the one-parse envelope route, with one deliberate change: on a
+# duplicated "type" key the discriminator now reads the LAST value, as the
+# payload fields always did and as the reference's serde_json::Value map
+# does (oanda_client.rs:55), where it used to read the first.
+
+_T = '"time":"2026-08-13T09:15:01Z"'
+_HB = '"type":"HEARTBEAT",' + _T
+_BODY = ('"instrument":"EUR_USD","status":"tradeable","closeoutBid":"1.0",'
+         '"closeoutAsk":"1.1","bids":[{"price":"1.0","liquidity":5}],"asks":[]')
+_PRICE = '"type":"PRICE",' + _T + ',' + _BODY
+
+
+def _obj(*parts: str) -> str:
+    return "{" + ",".join(parts) + "}"
+
+
+def _price(old: str, new: str) -> str:
+    assert old in _PRICE
+    return _obj(_PRICE.replace(old, new))
+
+
+TICK = ("price_tick", False, True)
+BEAT = ("heartbeat", True, False)
+UNKNOWN = ("unknown", True, True)
+
+ROUTING_GOLDEN = [
+    # top-level scalars, null and arrays are JSON, not objects: Unknown
+    ("123", UNKNOWN), ('"str"', UNKNOWN), ("true", UNKNOWN), ("null", UNKNOWN),
+    ("[]", UNKNOWN), ("[1,2]", UNKNOWN), ("[" + _obj(_HB) + "]", UNKNOWN),
+    ("{}", UNKNOWN),
+    (_obj(_PRICE), TICK),
+    (_obj(_T, _BODY), UNKNOWN),            # no "type": the discriminator is null
+    # heartbeat time: missing or null fails, any other JSON value is text
+    ('{"type":"HEARTBEAT"}', UNKNOWN),
+    ('{"type":"HEARTBEAT","time":null}', UNKNOWN),
+    ('{"type":"HEARTBEAT","time":5}', BEAT),
+    ('{"type":"HEARTBEAT","time":{"a":1}}', BEAT),
+    (_obj(_HB), BEAT),
+    (_obj(_HB.replace("HEARTBEAT", "heartbeat")), UNKNOWN),
+    # price-tick field validation
+    (_price('"instrument":"EUR_USD"', '"instrument":null'), UNKNOWN),
+    (_price('"instrument":"EUR_USD"', '"instrument":7'), TICK),
+    (_price('"bids":[{"price":"1.0","liquidity":5}]', '"bids":"oops"'), UNKNOWN),
+    (_price('"liquidity":5', '"liquidity":"many"'), TICK),
+    (_price('"closeoutBid":"1.0"', '"closeoutBid":1.0'), TICK),
+    (_price('"status":"tradeable"', '"status":null'), UNKNOWN),
+    (_price('"asks":[]', '"asks":null'), UNKNOWN),
+    (_price('"type":"PRICE"', '"type":null'), UNKNOWN),
+    (_price('"type":"PRICE"', '"type":5'), TICK),
+    # type HEARTBEAT wins over price fields, valid or not
+    (_obj(_HB, _BODY), BEAT),
+    (_obj(_HB, '"bids":"oops"'), BEAT),
+    (_obj(_HB, '"instrument":{"x":1}'), BEAT),
+    # trailing garbage after the first value is ignored
+    (_obj(_PRICE) + " garbage", TICK),
+    (_obj(_HB) + " x", BEAT),
+    (_obj(_PRICE) + _obj(_HB), TICK),
+    # duplicate keys: the last value wins
+    (_obj(_PRICE, '"instrument":"USD_JPY"'), TICK),
+    (_obj(_HB, _T.replace("09:15:01", "09:15:02")), BEAT),
+    (_obj(_PRICE, '"type":"HEARTBEAT"'), BEAT),                       # was TICK
+    ('{"type":"PRICE","type":"HEARTBEAT",' + _T + '}', BEAT),         # was UNKNOWN
+    (_obj(_HB, '"type":"PRICE"'), UNKNOWN),                           # was BEAT
+    # single quotes are accepted; a trailing comma is not JSON
+    (_obj(_HB).replace('"', "'"), BEAT),
+    (_obj(_PRICE).replace('"', "'"), TICK),
+    (_obj(_PRICE)[:-1] + ",}", None),
+    (_obj(_HB)[:-1] + ",}", None),
+    ('{"weird": true}', UNKNOWN),
+    ("{not json", None),
+    (_obj(_PRICE)[:-1], None),
+]
+
+
+def test_routing_golden_table(spark):
+    from oanda_stream_processor_spark.functions.ticks import route
+    lines = [line for line, _ in ROUTING_GOLDEN]
+    assert len(set(lines)) == len(lines)
+    df = spark.createDataFrame([(line,) for line in lines], "value string")
+    got = {r.raw: (r.message_type, r.price_tick is None, r.heartbeat is None)
+           for r in route(df).collect()}
+    assert [(line, got.get(line)) for line in lines] == ROUTING_GOLDEN
+

@@ -154,6 +154,31 @@ def hinted_unbounded_broadcasts(df):
     return bad
 
 
+def _calls(text: str, name: str) -> list[str]:
+    """Every ``name(...)`` call in ``text``, parentheses balanced."""
+    out = []
+    i = text.find(name + "(")
+    while i >= 0:
+        j, depth = i + len(name) + 1, 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(text[j], 0)
+            j += 1
+        out.append(text[i:j])
+        i = text.find(name + "(", j)
+    return out
+
+
+def json_parse_calls(df) -> tuple[set, set]:
+    """(distinct ``from_json`` calls, distinct ``get_json_object`` paths)
+    in the executed physical plan.  The tick chain parses each line
+    once: Catalyst's OptimizeCsvJsonExprs splits an option-less
+    from_json into one single-field parse per extracted field, so a
+    dropped option or a Spark upgrade shows here as extra parses."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    paths = {c[:-1].rsplit(", ", 1)[1] for c in _calls(plan, "get_json_object")}
+    return set(_calls(plan, "from_json")), paths
+
+
 def main() -> int:
     import os
 
@@ -181,6 +206,22 @@ def main() -> int:
                 failures.append(f"{name}: {frag!r} count {n} not in [{lo},{hi}]")
         print(("FAIL " if any(f.startswith(name) for f in failures) else "ok   ")
               + name)
+
+    # tick chain: one from_json per line; get_json_object only as the
+    # "is JSON" test
+    from oanda_stream_processor_spark.functions.ticks import (
+        derive_tick_columns, nonblank_lines, publishable, route)
+    from oanda_stream_processor_spark.sources.ndjson import read_tick_lines
+    capture = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "..", "tests", "data", "ticks.ndjson")
+    fj, gj = json_parse_calls(publishable(derive_tick_columns(route(
+        nonblank_lines(read_tick_lines(spark, capture))))))
+    if len(fj) != 1 or gj != {"$"}:
+        failures.append(f"ticks: {len(fj)} distinct from_json (want 1), "
+                        f"get_json_object paths {sorted(gj)} (want ['$'])")
+    print(("FAIL " if any(f.startswith("ticks:") for f in failures)
+           else "ok   ") + f"ticks one parse ({len(fj) + len(gj)} parse "
+                           "expressions)")
 
     # q01: filter pushed to parquet, columns pruned, map-side partial agg
     q01 = relational.q01_pricing_summary(spark, SF)
