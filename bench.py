@@ -120,6 +120,15 @@ PASSES_SIDECAR = os.environ.get("SPARK_GRAFT_BENCH_PASSES_PATH",
                                 "bench_passes_last.json")
 
 
+def _record_session(spark) -> None:
+    """Put the running session's effective master and
+    defaultParallelism into the record, so the core count a run used is
+    read from the record itself instead of inferred from timings."""
+    sc = spark.sparkContext
+    _PARTIAL["spark_master"] = sc.master
+    _PARTIAL["default_parallelism"] = sc.defaultParallelism
+
+
 def _emit(extra: dict | None = None) -> None:
     timings = _PARTIAL["queries"]
     floor = _PARTIAL.get("floor")
@@ -131,6 +140,8 @@ def _emit(extra: dict | None = None) -> None:
         "sf": _sf_from_dir(SF_DIR),
         "floor_calibration_sec": floor,
         "floor_ref_sec": FLOOR_REF_SEC,
+        "spark_master": _PARTIAL.get("spark_master"),
+        "default_parallelism": _PARTIAL.get("default_parallelism"),
     }
     if floor:
         out["value_floor_normalized"] = round(
@@ -172,6 +183,7 @@ def run_spark(names: list[str] | None) -> dict[str, float]:
     from oanda_stream_processor_spark.session import get_spark
 
     spark = get_spark(app_name="bench")
+    _record_session(spark)
     qs = ent.queries()
     if names:
         qs = {n: qs[n] for n in names}

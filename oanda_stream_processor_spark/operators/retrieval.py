@@ -112,11 +112,23 @@ def corpus_term_frames_from(tok: DataFrame):
     (the streaming bm25gate's merge theorem)."""
     tf = (tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
           .withColumnRenamed("doc_id", "cand_id"))
+    return (tf, *postings_aggregates_from(tf))
+
+
+def postings_aggregates_from(tf: DataFrame):
+    """(dfq, dl, stats) from a (cand_id, term, tf) postings frame — the
+    ONE spelling of the tf-derived aggregates, shared by the one-shot
+    plans (corpus_term_frames_from) and the streaming store writer,
+    which hands in its materialized batch postings."""
     dfq = tf.groupBy("term").agg(F.count("*").alias("df"))
     dl = tf.groupBy("cand_id").agg(F.sum("tf").alias("dl"))
-    stats = dl.agg(F.count("*").alias("n_docs"),
-                   F.sum("dl").alias("sum_dl"))
-    return tf, dfq, dl, stats
+    return dfq, dl, corpus_stats_from(dl)
+
+
+def corpus_stats_from(dl: DataFrame) -> DataFrame:
+    """One-row (n_docs, sum_dl) from a (cand_id, dl) lengths frame."""
+    return dl.agg(F.count("*").alias("n_docs"),
+                  F.sum("dl").alias("sum_dl"))
 
 
 def corpus_term_frames(d: DataFrame):
@@ -352,19 +364,31 @@ def corpus_field_frames(d: DataFrame):
     tff = (tok.groupBy("doc_id", "term", "field")
            .agg(F.count("*").alias("tf"))
            .withColumnRenamed("doc_id", "cand_id"))
+    return (tff, *field_aggregates_from(tff))
+
+
+def field_aggregates_from(tff: DataFrame):
+    """(dlf, dfd, ndocs, avgf) from a (cand_id, term, field, tf) field
+    postings frame — the ONE spelling of the tff-derived aggregates,
+    shared by corpus_field_frames and the streaming field-store
+    writer."""
     dlf = (tff.groupBy("cand_id", "field")
            .agg(F.sum("tf").alias("dlf")))
     dfd = (tff.select("cand_id", "term").distinct()
            .groupBy("term").agg(F.count("*").alias("df")))
     ndocs = (tff.select("cand_id").distinct()
              .agg(F.count("*").alias("n_docs")))
-    avgf = (dlf.groupBy("field")
-            .agg(F.sum("dlf").alias("sum_dlf"))
+    avgf = (field_length_sums_from(dlf)
             .crossJoin(F.broadcast(ndocs))
             .select("field",
                     (F.col("sum_dlf").cast("double")
                      / F.col("n_docs")).alias("avgdl")))
-    return tff, dlf, dfd, ndocs, avgf
+    return dlf, dfd, ndocs, avgf
+
+
+def field_length_sums_from(dlf: DataFrame) -> DataFrame:
+    """(field, sum_dlf) from a (cand_id, field, dlf) lengths frame."""
+    return dlf.groupBy("field").agg(F.sum("dlf").alias("sum_dlf"))
 
 
 SQL_BM25F_POOL = f"""
@@ -637,28 +661,35 @@ _GATE_SIDECAR = ".gate_memo.json"
 
 
 def _gate_sidecar_path(key) -> str | None:
-    """Sidecar path for a persistable gate key: the common local
-    directory above every input file (<store>/<layout>/batch_id=*/…
-    for both frames -> the store root).  None when the kind is not
-    store-backed or any file is not a plain local path."""
+    """Sidecar path for a persistable gate key: <root>/.gate_memo.json
+    when EVERY input file sits in a <root>/<layout>/batch_id=<id>/
+    directory of one store root (the store writers' shape, compacted
+    generations included).  None when the kind is not store-backed,
+    any file is not a plain local path, or the files span several
+    roots — frames read from sibling stores must not leave a sidecar
+    in their shared parent."""
     import os
     from urllib.parse import unquote, urlparse
     kind, file_sets = key
     if not kind.endswith("_store"):
         return None
-    paths = []
+    roots = set()
     for tup in file_sets:
         for p in tup:
             if p.startswith("file:"):
-                paths.append(unquote(urlparse(p).path))
-            elif p.startswith("/"):
-                paths.append(p)
-            else:        # remote FS — no local sidecar
+                p = unquote(urlparse(p).path)
+            elif not p.startswith("/"):     # remote FS — no local sidecar
                 return None
-    common = os.path.commonpath(paths)
-    if not os.path.isdir(common):
+            batch_dir = os.path.dirname(p)
+            if not os.path.basename(batch_dir).startswith("batch_id="):
+                return None
+            roots.add(os.path.dirname(os.path.dirname(batch_dir)))
+    if len(roots) != 1:
         return None
-    return os.path.join(common, _GATE_SIDECAR)
+    root = roots.pop()
+    if not os.path.isdir(root):
+        return None
+    return os.path.join(root, _GATE_SIDECAR)
 
 
 def _gate_fingerprint(key) -> str:

@@ -54,7 +54,13 @@ compactor killed mid-swap leaves a store that the next compact() call
 heals before doing anything else; readers between the crash and the
 heal see a torn store, which is why compaction is documented as a
 stop-the-world maintenance operation (run it between availableNow
-trigger cycles, never concurrently with the writer).
+trigger cycles, never concurrently with the writer).  The rule is
+single-writer: a store has exactly one writer, the ingest stream's
+foreachBatch body, and compaction must never run beside another
+writer of the same store.  The ``start_*_stream(compact_every=K)``
+hook satisfies it by running the fold INSIDE that body, between two
+of its own batch writes; a manual compact_* call must first stop the
+stream.
 
 Scale note (100 TB): compaction cost is one read+write of the folded
 bytes per layout — O(store size), embarrassingly parallel, and

@@ -48,8 +48,8 @@ layouts guarantee it:
 
 * CANONICAL (r15): bm25gate.write_batch_partials persists the
   impact histogram as its sixth partial (<bm25_state>/impact) from
-  the SAME cached per-batch tf — hist-docs ⊆ store-docs holds by
-  construction, one writer, one checkpoint.  Pass theta_state=None
+  the SAME materialized per-batch tf — hist-docs ⊆ store-docs holds
+  by construction, one writer, one checkpoint.  Pass theta_state=None
   (or the bm25gate read path) to use it.
 * EXTERNAL (start_theta_stream — a separately-checkpointed feed):
   the read ENFORCES the invariant with a batch-id guard
@@ -100,9 +100,10 @@ TG_TF_CAP = 32   # tf cap in the histogram key (satur ↑ in tf: safe)
 def impact_partial_from(tf: DataFrame, dl: DataFrame) -> DataFrame:
     """(term, tfc, dlb, n) from explicit batch postings frames — the
     shape bm25gate.write_batch_partials persists as its sixth partial
-    (r15: the canonical lockstep layout, reusing the writer's cached
-    tf so the histogram is BY CONSTRUCTION over exactly the docs the
-    postings store carries — the r14 ADVICE soundness condition)."""
+    (r15: the canonical lockstep layout, reusing the writer's
+    materialized tf so the histogram is BY CONSTRUCTION over exactly
+    the docs the postings store carries — the r14 ADVICE soundness
+    condition)."""
     return (tf.join(dl, "cand_id")
             .select("term",
                     F.least(F.col("tf"), F.lit(TG_TF_CAP)).alias("tfc"),
@@ -358,7 +359,7 @@ def hist_theta_pruned_topk(spark: SparkSession, bm25_state: str,
 # BM25F family pools at TOP_K depth).  Sound for the same lockstep
 # reason as the plain fold: write_batch_field_partials persists the
 # histogram as the field store's seventh partial from the SAME
-# cached tff, so hist-docs ⊆ store-docs by construction.
+# materialized tff, so hist-docs ⊆ store-docs by construction.
 # ------------------------------------------------------------------------------
 
 def field_impact_partial_from(tff: DataFrame,

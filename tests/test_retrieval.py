@@ -379,11 +379,11 @@ def test_gate_sidecar_heals_a_corrupt_file(tmp_path):
     instead of disabling persistence for good."""
     import json
 
-    batch = tmp_path / "store" / "batch_id=0"
+    batch = tmp_path / "store" / "tf" / "batch_id=0"
     batch.mkdir(parents=True)
     files = tuple(f"file:{batch}/part-{i}.parquet" for i in range(2))
     key = ("plan_store", (files,))
-    side = batch / R._GATE_SIDECAR
+    side = tmp_path / "store" / R._GATE_SIDECAR
     assert R._gate_sidecar_path(key) == str(side)
     side.write_text("{not json")
     assert R._gate_sidecar_load(key) is None
@@ -392,6 +392,28 @@ def test_gate_sidecar_heals_a_corrupt_file(tmp_path):
     R._GATE_MEMO.pop(key)               # a restarted process
     assert R._gate_memo_get(key) == "blockmax"
     assert json.loads(side.read_text())["plan_store"]["verdict"] == "blockmax"
+
+
+def test_gate_sidecar_stays_inside_one_store(tmp_path):
+    """The sidecar lands in the store root only when every input file
+    sits in <root>/<layout>/batch_id=<id>/ of that one root: a gate fed
+    tf from one store and dl from a sibling writes nothing into their
+    shared parent, and neither does a file outside the batch shape."""
+    def files(store, layout):
+        batch = tmp_path / store / layout / "batch_id=0"
+        batch.mkdir(parents=True, exist_ok=True)
+        return (f"file:{batch}/part-0.parquet",)
+
+    one = ("plan_store", (files("a", "tf"), files("a", "dl")))
+    assert R._gate_sidecar_path(one) == str(tmp_path / "a"
+                                            / R._GATE_SIDECAR)
+    siblings = ("plan_store", (files("a", "tf"), files("b", "dl")))
+    assert R._gate_sidecar_path(siblings) is None
+    R._gate_memo_put(siblings, "flat")
+    R._GATE_MEMO.pop(siblings)
+    assert not (tmp_path / R._GATE_SIDECAR).exists()
+    flat = ("plan_store", ((f"file:{tmp_path}/a/tf/part-0.parquet",),))
+    assert R._gate_sidecar_path(flat) is None
 
 
 def test_maxscore_prunes_hard_on_zipfian_vocab(spark):

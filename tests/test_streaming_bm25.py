@@ -6,6 +6,7 @@ q175 pools row-for-row — the SUM-decomposition parity theorem."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from oanda_stream_processor_spark.io import load_table
@@ -578,3 +579,105 @@ def test_served_bm25f_blockmax_tracks_appends(spark, tmp_path):
     shutil.rmtree(f"{state}/fblk")
     assert _table(serve_bm25f_blockmax_topk(spark, state, plan="block",
                                             theta="seed")) == want
+
+
+def _bm25_layouts(spark, state, d):
+    """(merged store reads, direct one-shot frames) of the BM25 store."""
+    from oanda_stream_processor_spark.operators.retrieval import (
+        block_stats_from,
+    )
+    from oanda_stream_processor_spark.streaming.bm25gate import (
+        read_block_stats,
+        read_dl,
+        read_tf,
+    )
+    from oanda_stream_processor_spark.streaming.thetagate import (
+        impact_partial_from,
+        read_impact_hist,
+    )
+    tf, dfq, dl, stats = corpus_term_frames(d)
+    merged = {"tf": read_tf(spark, state), "dl": read_dl(spark, state),
+              "df": read_term_df(spark, state),
+              "corpus": read_corpus_stats(spark, state),
+              "blk": read_block_stats(spark, state),
+              "impact": read_impact_hist(spark, f"{state}/impact")}
+    direct = {"tf": tf, "dl": dl, "df": dfq, "corpus": stats,
+              "blk": block_stats_from(tf, dl),
+              "impact": impact_partial_from(tf, dl)}
+    return merged, direct
+
+
+def _field_layouts(spark, state, d):
+    """(merged store reads, direct one-shot frames) of the BM25F store."""
+    from oanda_stream_processor_spark.operators.retrieval import (
+        corpus_field_frames,
+        field_block_stats_from,
+        field_length_sums_from,
+    )
+    from oanda_stream_processor_spark.streaming.bm25gate import (
+        _field_store_frames,
+        read_field_block_stats,
+    )
+    from oanda_stream_processor_spark.streaming.thetagate import (
+        field_impact_partial_from,
+        read_field_impact_hist,
+    )
+    tff, dlf, dfd, ndocs, _ = corpus_field_frames(d)
+    m_tff, m_dlf, m_dfd, m_ndocs, _ = _field_store_frames(spark, state)
+    merged = {"tff": m_tff, "dlf": m_dlf, "fdf": m_dfd, "fnd": m_ndocs,
+              "fsum": (spark.read.parquet(f"{state}/fsum")
+                       .groupBy("field")
+                       .agg(F.sum("sum_dlf").alias("sum_dlf"))),
+              "fblk": read_field_block_stats(spark, state),
+              "fimpact": read_field_impact_hist(spark, f"{state}/fimpact")}
+    direct = {"tff": tff, "dlf": dlf, "fdf": dfd, "fnd": ndocs,
+              "fsum": field_length_sums_from(dlf),
+              "fblk": field_block_stats_from(tff, dlf),
+              "fimpact": field_impact_partial_from(tff, dlf)}
+    return merged, direct
+
+
+@pytest.mark.parametrize("writer, layouts", [
+    ("write_batch_partials", _bm25_layouts),
+    ("write_batch_field_partials", _field_layouts),
+])
+def test_store_writer_shape(spark, tmp_path, writer, layouts):
+    """Each store writer lays a micro-batch down as ONE parquet file per
+    layout and batch (the postings are materialized at AQE's coalesced
+    width, not at the shuffle-partition count a cached plan keeps), an
+    empty batch still writes one readable, schema-carrying file per
+    layout that the batch-id guards see, and every layout's merged read
+    equals the direct aggregate over the whole corpus, column types
+    included."""
+    import os
+
+    from oanda_stream_processor_spark.streaming import bm25gate
+    from oanda_stream_processor_spark.streaming.thetagate import (
+        _store_batch_ids,
+    )
+
+    common = "the of and to in for a is on at"
+    rows = [(i, f"rare{i % 7} {common} tail{i % 11} {common[:i % 9]}")
+            for i in range(240)]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    state = str(tmp_path / "store")
+    write = getattr(bm25gate, writer)
+    for i in range(3):
+        write(d.where(F.col("doc_id") % 3 == i), state, i)
+    write(d.where(F.col("doc_id") < 0), state, 3)      # matches no doc
+
+    merged, direct = layouts(spark, state, d)
+    for name, frame in merged.items():
+        assert _table(frame) == _table(direct[name]), name
+        assert dict(frame.dtypes) == dict(direct[name].dtypes), name
+        layout_dir = os.path.join(state, name)
+        assert _store_batch_ids(spark, layout_dir) == {0, 1, 2, 3}, name
+        for b in range(4):
+            batch_dir = os.path.join(layout_dir, f"batch_id={b}")
+            parts = [f for f in os.listdir(batch_dir)
+                     if f.startswith("part-") and f.endswith(".parquet")]
+            assert len(parts) == 1, (name, b, parts)
+        empty = spark.read.parquet(os.path.join(layout_dir, "batch_id=3"))
+        assert set(empty.columns) == set(direct[name].columns), name
+        if name not in ("corpus", "fnd"):     # global aggregates: 1 row
+            assert empty.count() == 0, name
