@@ -88,8 +88,8 @@ def q60_tick_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "message_type",
         F.col("price_tick.instrument").alias("instrument"),
         F.col("spread"),
-        format_spread(F.col("spread")).alias("spread_display"),
-        format_display_time(F.col("event_ts")).alias("time_display"),
+        format_spread("spread").alias("spread_display"),
+        format_display_time("event_ts").alias("time_display"),
     )
 
 

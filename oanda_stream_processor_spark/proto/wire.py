@@ -15,9 +15,8 @@ for the message shapes declared in the reference wire schema
   Timestamp         { int64 seconds = 1; int32 nanos = 2; }
 
 proto3 semantics honored: default values (empty string, 0) are omitted;
-oneof encodes exactly one branch. Used inside foreachBatch /
-mapInPandas — the encoder runs executor-side over Arrow batches, never
-on the driver.
+oneof encodes exactly one branch. Used inside mapInArrow — the encoder
+runs executor-side over Arrow batches, never on the driver.
 
 If google.protobuf becomes available, these bytes parse with the
 generated classes for the same .proto — the contract, not this encoder,
@@ -28,10 +27,10 @@ from __future__ import annotations
 
 _WT_VARINT = 0
 _WT_LEN = 2
+_U64 = (1 << 64) - 1
 
-
-# one-byte varints: every value 0-127, which covers the tag byte of
-# every field number below 16 — most calls are served without a loop
+# one-byte varints: every value 0-127, which covers every length below
+# 128 bytes — most calls are served without a loop
 _SMALL = tuple(bytes((i,)) for i in range(128))
 
 
@@ -39,75 +38,71 @@ def _varint(n: int) -> bytes:
     if 0 <= n < 128:
         return _SMALL[n]
     if n < 0:
-        n &= (1 << 64) - 1  # two's-complement 64-bit, per spec
+        n &= _U64  # two's-complement 64-bit, per spec
     out = bytearray()
-    while True:
-        b = n & 0x7F
+    while n > 127:
+        out.append(n & 0x7F | 0x80)
         n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    out.append(n)
+    return bytes(out)
 
 
 def _tag(field: int, wire_type: int) -> bytes:
     return _varint((field << 3) | wire_type)
 
 
-def _len_field(field: int, payload: bytes) -> bytes:
-    if not payload:
-        return b""  # proto3: empty string/message-bytes w/ no presence -> omit
-    return _tag(field, _WT_LEN) + _varint(len(payload)) + payload
+# Every field number in the schema is below 16, so each tag is a single
+# constant byte, looked up here instead of encoded per field.
+_LEN = tuple(_tag(f, _WT_LEN) for f in range(16))
+_VARINT = tuple(_tag(f, _WT_VARINT) for f in range(16))
 
 
-def _str_field(field: int, s: str | None) -> bytes:
-    return _len_field(field, s.encode("utf-8") if s else b"")
-
-
-def _uint_field(field: int, n: int | None) -> bytes:
-    if not n:
-        return b""  # proto3 default 0 -> omit
-    return _tag(field, _WT_VARINT) + _varint(n)
-
-
-def encode_timestamp(seconds: int, nanos: int) -> bytes:
-    return _uint_field(1, seconds) + _uint_field(2, nanos)
-
-
-def _submsg_field(field: int, payload: bytes, force: bool = False) -> bytes:
-    """Submessage presence is explicit: encode even when empty if set."""
-    if payload == b"" and not force:
-        return b""
-    return _tag(field, _WT_LEN) + _varint(len(payload)) + payload
+def encode_timestamp(seconds: int | None, nanos: int | None) -> bytes:
+    out = _VARINT[1] + _varint(seconds) if seconds else b""  # proto3: 0 omitted
+    if nanos:
+        out += _VARINT[2] + _varint(nanos)
+    return out
 
 
 def encode_price_level(price: str | None, liquidity: int | None) -> bytes:
-    return _str_field(1, price) + _uint_field(2, liquidity or 0)
+    out = b""
+    if price:  # proto3: empty string omitted
+        p = price.encode("utf-8")
+        out = _LEN[1] + _varint(len(p)) + p
+    if liquidity:
+        out += _VARINT[2] + _varint(liquidity)
+    return out
 
 
 def encode_price_tick(asks, bids, closeout_ask, closeout_bid,
                       instrument, status, ts_seconds, ts_nanos) -> bytes:
-    out = bytearray()
-    for lv in asks or []:
-        out += _submsg_field(1, encode_price_level(lv[0], lv[1]), force=True)
-    for lv in bids or []:
-        out += _submsg_field(2, encode_price_level(lv[0], lv[1]), force=True)
-    out += _str_field(3, closeout_ask)
-    out += _str_field(4, closeout_bid)
-    out += _str_field(5, instrument)
-    out += _str_field(6, status)
+    """Levels are (price, liquidity) pairs.  A level or the timestamp is
+    a submessage with explicit presence: it is written even when empty."""
+    parts = []
+    for tag, levels in ((_LEN[1], asks), (_LEN[2], bids)):
+        for lv in levels or ():
+            level = encode_price_level(lv[0], lv[1])
+            parts += (tag, _varint(len(level)), level)
+    for tag, s in ((_LEN[3], closeout_ask), (_LEN[4], closeout_bid),
+                   (_LEN[5], instrument), (_LEN[6], status)):
+        if s:
+            b = s.encode("utf-8")
+            parts += (tag, _varint(len(b)), b)
     if ts_seconds is not None:
-        out += _submsg_field(7, encode_timestamp(ts_seconds, ts_nanos), force=True)
-    return bytes(out)
+        ts = encode_timestamp(ts_seconds, ts_nanos)
+        parts += (_LEN[7], _varint(len(ts)), ts)
+    return b"".join(parts)
 
 
 def encode_heartbeat(ts_seconds, ts_nanos, hb_type: str | None) -> bytes:
-    out = bytearray()
+    parts = []
     if ts_seconds is not None:
-        out += _submsg_field(1, encode_timestamp(ts_seconds, ts_nanos), force=True)
-    out += _str_field(2, hb_type)
-    return bytes(out)
+        ts = encode_timestamp(ts_seconds, ts_nanos)
+        parts += (_LEN[1], _varint(len(ts)), ts)
+    if hb_type:
+        b = hb_type.encode("utf-8")
+        parts += (_LEN[2], _varint(len(b)), b)
+    return b"".join(parts)
 
 
 def encode_stream_message(message_type: str, payload: bytes) -> bytes:
@@ -115,7 +110,7 @@ def encode_stream_message(message_type: str, payload: bytes) -> bytes:
     closed; anything else (Unknown) must not reach this encoder
     (main.rs:117-119 parity is enforced upstream by publishable())."""
     if message_type == "price_tick":
-        return _submsg_field(1, payload, force=True)
+        return _LEN[1] + _varint(len(payload)) + payload
     if message_type == "heartbeat":
-        return _submsg_field(2, payload, force=True)
+        return _LEN[2] + _varint(len(payload)) + payload
     raise ValueError(f"unpublishable message_type: {message_type!r}")

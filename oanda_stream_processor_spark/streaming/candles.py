@@ -17,12 +17,11 @@ def _mid_price(df: DataFrame) -> DataFrame:
     """Mid price from the closeout quotes (0.0-default cast semantics,
     main.rs:70-72)."""
     from ..functions.ticks import price_as_double
-    tick = F.col("price_tick")
     return (df.where(F.col("message_type") == "price_tick")
-              .select(tick["instrument"].alias("instrument"),
+              .select(F.col("price_tick.instrument").alias("instrument"),
                       F.col("event_ts"),
-                      ((price_as_double(tick["closeoutAsk"])
-                        + price_as_double(tick["closeoutBid"])) / 2).alias("mid"),
+                      ((price_as_double("price_tick.closeoutAsk")
+                        + price_as_double("price_tick.closeoutBid")) / 2).alias("mid"),
                       F.col("spread")))
 
 

@@ -10,7 +10,7 @@
   way. At cluster scale the idiomatic analog is the Kafka sink with
   binary `value` — same envelope bytes.
 * partitioned — one publisher per partition, opened, fed and closed
-  inside the same mapInPandas pass that encodes (one Python hop; only
+  inside the same mapInArrow pass that encodes (one Python hop; only
   per-partition counts return to the driver).
 """
 
@@ -19,7 +19,7 @@ from __future__ import annotations
 import logging
 import os
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..functions.ticks import publishable
@@ -96,16 +96,17 @@ def publish_batch(batch_df: DataFrame, publisher) -> int:
 
     This is the single-socket reference-parity edge (one PUB socket,
     publisher.rs:10-25): payloads funnel through the driver, which caps
-    throughput at one socket's rate, in arrival order (the batch is not
-    repartitioned).  Partition k+1 is computed while the driver
-    publishes partition k, so the driver holds at most two partitions.
-    For fan-out at scale use publish_batch_partitioned below."""
-    encoded = encode_stream(publishable(batch_df))
-    n = 0
-    for row in encoded.toLocalIterator(prefetchPartitions=True):
-        publisher.publish(bytes(row.payload))
-        n += 1
-    return n
+    throughput at one socket's rate.  The payload column is collected
+    with one ``toArrow()`` — one job for the whole micro-batch, and
+    Arrow returns the partitions in order, so frames keep arrival order
+    (the batch is not repartitioned).  The driver therefore holds one
+    micro-batch's payloads at once (about 100 bytes a frame), a size the
+    source bounds per trigger (``max_files_per_trigger``).  For fan-out
+    at scale use publish_batch_partitioned below."""
+    payloads = encode_stream(publishable(batch_df)).select("payload").toArrow()
+    for payload in payloads.column(0).to_pylist():
+        publisher.publish(payload)
+    return payloads.num_rows
 
 
 def publish_batch_partitioned(batch_df: DataFrame, publisher_factory) -> int:
@@ -130,17 +131,17 @@ def publish_batch_partitioned(batch_df: DataFrame, publisher_factory) -> int:
         pub = publisher_factory()
         n = 0
         try:
-            for pdf in batches:
-                for payload in encode_payloads(pdf):
+            for batch in batches:
+                for payload in encode_payloads(batch):
                     pub.publish(payload)
-                n += len(pdf)
+                n += batch.num_rows
         finally:
             close = getattr(pub, "close", None)
             if callable(close):
                 close()
-        yield pd.DataFrame({"n": [n]})
+        yield pa.RecordBatch.from_pydict({"n": [n]})
 
-    return sum(r.n for r in columns.mapInPandas(_publish, "n long").collect())
+    return sum(r.n for r in columns.mapInArrow(_publish, "n long").collect())
 
 
 def start_publish_stream_partitioned(stream_df: DataFrame, publisher_factory,

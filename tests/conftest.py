@@ -5,7 +5,12 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout, for the driver and for Spark's Python workers alike (they
+# import the program through PYTHONPATH, not through this sys.path)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 from oanda_stream_processor_spark.session import get_spark  # noqa: E402
 
@@ -113,4 +118,4 @@ def spark():
 
 @pytest.fixture()
 def tick_capture() -> str:
-    return "/root/repo/tests/data/ticks.ndjson"
+    return os.path.join(ROOT, "tests", "data", "ticks.ndjson")

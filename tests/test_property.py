@@ -5,9 +5,13 @@ from __future__ import annotations
 
 import json
 
+import pyarrow as pa
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from oanda_stream_processor_spark.proto import wire
+from oanda_stream_processor_spark.proto.wire_decode import decode_stream_message
+from oanda_stream_processor_spark.streaming.encode import encode_payloads
 from tests.test_proto import decode_fields, read_varint
 
 prices = st.one_of(
@@ -50,6 +54,89 @@ def test_price_tick_structure(asks, bids, ca, cb, instr, status, secs, nanos):
     assert set(by_field) <= {1, 2, 3, 4, 5, 6, 7}  # closed field set
     env = decode_fields(wire.encode_stream_message("price_tick", b))
     assert [f for f, _, _ in env] == [1]           # oneof: exactly one branch
+
+
+# --- flat-column encoder (streaming.encode.encode_payloads) ---------------
+# One Arrow batch of encode_columns rows must decode, through the
+# independent proto/wire_decode, back to its inputs in row order: null
+# ladder entries and empty strings read back as proto3 defaults, a
+# 128-byte string needs a 2-byte length varint, and a pre-epoch second
+# folds back negative.
+
+FLAT_SCHEMA = pa.schema([
+    ("message_type", pa.string()),
+    ("ask_prices", pa.list_(pa.string())),
+    ("ask_liquidity", pa.list_(pa.int64())),
+    ("bid_prices", pa.list_(pa.string())),
+    ("bid_liquidity", pa.list_(pa.int64())),
+    ("closeout_ask", pa.string()),
+    ("closeout_bid", pa.string()),
+    ("instrument", pa.string()),
+    ("status", pa.string()),
+    ("heartbeat_type", pa.string()),
+    ("ts_seconds", pa.int64()),
+    ("ts_nanos", pa.int32()),
+])
+wire_text = st.one_of(
+    st.none(), st.just(""), texts,
+    st.text(alphabet=st.characters(codec="utf-8"), min_size=128, max_size=140))
+wire_liquidity = st.one_of(st.none(), st.just(0), liquidity)
+ladder = st.lists(st.tuples(wire_text, wire_liquidity), max_size=3)
+timestamps = st.one_of(
+    st.tuples(st.none(), st.none()),
+    st.tuples(st.integers(-(2**40), 2**40),
+              st.sampled_from([0, 999_999_000]) | st.integers(0, 999_999).map(
+                  lambda us: us * 1000)))
+tick_rows = st.builds(
+    lambda asks, bids, strs, ts: {
+        "message_type": "price_tick",
+        "ask_prices": [p for p, _ in asks], "ask_liquidity": [q for _, q in asks],
+        "bid_prices": [p for p, _ in bids], "bid_liquidity": [q for _, q in bids],
+        **dict(zip(("closeout_ask", "closeout_bid", "instrument", "status"), strs)),
+        "heartbeat_type": None, "ts_seconds": ts[0], "ts_nanos": ts[1]},
+    ladder, ladder, st.tuples(wire_text, wire_text, wire_text, wire_text),
+    timestamps)
+beat_rows = st.builds(
+    lambda hb_type, ts: {
+        "message_type": "heartbeat", "heartbeat_type": hb_type,
+        "ts_seconds": ts[0], "ts_nanos": ts[1]},
+    wire_text, timestamps)
+
+
+def _flat_batch(rows) -> pa.RecordBatch:
+    return pa.RecordBatch.from_pylist(rows, schema=FLAT_SCHEMA)
+
+
+def _expected(row) -> tuple[str, dict]:
+    ts = (None, None) if row["ts_seconds"] is None else (row["ts_seconds"],
+                                                         row["ts_nanos"])
+    if row["message_type"] == "heartbeat":
+        return "heartbeat", {"ts_seconds": ts[0], "ts_nanos": ts[1],
+                             "type": row["heartbeat_type"] or ""}
+
+    def levels(prices, amounts):
+        return [(p or "", q or 0) for p, q in zip(prices, amounts)]
+
+    return "price_tick", {
+        "asks": levels(row["ask_prices"], row["ask_liquidity"]),
+        "bids": levels(row["bid_prices"], row["bid_liquidity"]),
+        **{k: row[k] or "" for k in ("closeout_ask", "closeout_bid",
+                                     "instrument", "status")},
+        "ts_seconds": ts[0], "ts_nanos": ts[1]}
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.one_of(tick_rows, beat_rows), max_size=8))
+def test_flat_encoder_round_trips_in_row_order(rows):
+    payloads = encode_payloads(_flat_batch(rows))
+    assert [decode_stream_message(p) for p in payloads] == [
+        _expected(r) for r in rows]
+
+
+def test_flat_encoder_rejects_a_tick_without_its_struct():
+    # a price_tick row whose price_tick struct is null flattens to nulls
+    with pytest.raises(TypeError, match="NoneType"):
+        encode_payloads(_flat_batch([{"message_type": "price_tick"}]))
 
 
 @settings(max_examples=25, deadline=None)

@@ -10,7 +10,8 @@ import hashlib
 import pytest
 from pyspark.sql import types as T
 
-from oanda_stream_processor_spark.proto.wire_decode import iter_frames
+from oanda_stream_processor_spark.proto.wire_decode import (
+    decode_stream_message, iter_frames)
 from oanda_stream_processor_spark.schemas import HEARTBEAT, PRICE_TICK
 from oanda_stream_processor_spark.sources.ndjson import read_ticks
 from oanda_stream_processor_spark.streaming.sinks import (
@@ -105,3 +106,23 @@ def test_partitioned_edge_closes_publisher_when_encode_raises(spark, tmp_path):
     # every publisher opened was closed
     assert stems(".opened")
     assert stems(".closed") == stems(".opened")
+
+
+def test_null_ladder_element_publishes_an_empty_level(spark, tmp_path):
+    # from_json nulls a bad array element (the documented PriceLevel
+    # divergence); the frame carries it as an all-default level
+    src = tmp_path / "null_level.ndjson"
+    src.write_text(
+        '{"type":"PRICE","time":"2026-08-13T00:00:01Z","instrument":"X_Y",'
+        '"status":"t","closeoutBid":"1.0","closeoutAsk":"1.1",'
+        '"bids":[null,{"price":"1.0","liquidity":5}],"asks":[]}\n')
+    out = tmp_path / "frames.bin"
+    pub = FilePublisher(str(out))
+    try:
+        assert publish_batch(read_ticks(spark, str(src)), pub) == 1
+    finally:
+        pub.close()
+    [frame] = iter_frames(out.read_bytes())
+    kind, tick = decode_stream_message(frame)
+    assert kind == "price_tick"
+    assert tick["bids"] == [("", 0), ("1.0", 5)] and tick["asks"] == []

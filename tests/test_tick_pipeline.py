@@ -3,6 +3,9 @@ each test is tied to a cited behavior of the reference pipeline."""
 
 from __future__ import annotations
 
+import os
+import threading
+
 from pyspark.sql import functions as F
 
 from oanda_stream_processor_spark.functions.ticks import publishable
@@ -188,3 +191,37 @@ def test_routing_golden_table(spark):
            for r in route(df).collect()}
     assert [(line, got.get(line)) for line in lines] == ROUTING_GOLDEN
 
+
+# py4j round trips that build the streaming chain and its encode frame
+# (warm, this thread): 1202 when the chain was Column-API calls, 108 as
+# SQL text.  Twice the SQL-text count, so one more expression passes and
+# a return to per-field Column calls does not.
+CHAIN_BUILD_ROUND_TRIPS = 216
+
+
+def test_chain_build_round_trips(spark, tick_capture, monkeypatch):
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+    from oanda_stream_processor_spark.streaming.encode import encode_stream
+    from oanda_stream_processor_spark.streaming.pipeline import build_stream
+
+    def build():
+        return encode_stream(publishable(build_stream(
+            spark, os.path.dirname(tick_capture))))
+
+    build()  # first-use lookups happen once per session
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, sent = client.send_command, threading.get_ident(), []
+    # garbage collection of Python-side handles also sends commands, at
+    # times the build does not choose; they are not counted
+    release = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == me and not command.startswith(release):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    build()
+    monkeypatch.undo()
+    assert len(sent) <= CHAIN_BUILD_ROUND_TRIPS, len(sent)
